@@ -2,8 +2,9 @@
 
 The iterative operators (connected components, PageRank, LPA, pointer
 doubling) and the banded sketch joins all follow the same shape: a
-frame is materialized once (``localCheckpoint``) and then re-read by
-several downstream jobs — per-round joins and aggregates whose per-row
+frame is materialized once (``localCheckpoint``; the iterative loops'
+checkpoint contract is stated in ``functions/iterate.py``) and then
+re-read by several downstream jobs — per-round joins and aggregates whose per-row
 work is LIGHT (hash, compare, add over narrow rows).  For those jobs
 the cost driver is task count, not bytes: a local-mode exchange over
 64 map × 32 reduce tasks costs ~1 s of pure scheduling whether it
@@ -26,7 +27,8 @@ Two entry points:
   per-row work is light; CPU-heavy chains (Arrow decodes, regex
   batteries) keep core-count parallelism upstream of the checkpoint.
 * :func:`shuffle_partitions` — a context manager pinning
-  ``spark.sql.shuffle.partitions`` for a driver-side loop whose
+  ``spark.sql.shuffle.partitions`` (``iterate.Fixpoint.pin`` holds it
+  around the iterative loops) for a driver-side loop whose
   actions all operate at a known, measured scale, so the per-round
   exchanges are born data-sized instead of core-count-sized.  AQE
   stays on (skew handling at real scale is untouched — the pinned

@@ -1191,23 +1191,16 @@ def apply_line_filters(df: DataFrame, *, text_col: str = "text",
     shaped = F.filter(
         lines, lambda x: (n_words(x) >= min_words) & x.rlike('[.!?"]$')
     )
-    base = df.withColumn("_afl_l", shaped).withColumn(
-        "_afl_n", F.size(lines)
-    )
-    keep_idx = F.filter(
-        F.sequence(F.lit(1), F.size("_afl_l")),
-        lambda i: F.array_position(
-            F.col("_afl_l"), F.element_at(F.col("_afl_l"), i)) == i,
-    )
-    kept = F.transform(keep_idx, lambda i: F.element_at(F.col("_afl_l"), i))
+    # array_distinct keeps each line's first occurrence, in order
     return (
-        base.withColumn("_afl_k", kept)
+        df.withColumn("_afl_n", F.size(lines))
+        .withColumn("_afl_k", F.array_distinct(shaped))
         .withColumn(text_col, F.concat_ws("\n", F.col("_afl_k")))
         .withColumn(
             "lines_removed",
             (F.col("_afl_n") - F.size("_afl_k")).cast("long"),
         )
-        .drop("_afl_l", "_afl_n", "_afl_k")
+        .drop("_afl_n", "_afl_k")
     )
 
 

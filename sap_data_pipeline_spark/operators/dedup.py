@@ -23,8 +23,8 @@ from pyspark.sql.window import Window
 
 from sap_data_pipeline_spark.functions import text as X
 from sap_data_pipeline_spark.functions import vectors as V
-from sap_data_pipeline_spark.functions.sizing import right_size, shuffle_partitions
-from sap_data_pipeline_spark.utils import temp_view_name
+from sap_data_pipeline_spark.functions.iterate import Fixpoint, temp_views
+from sap_data_pipeline_spark.functions.sizing import right_size
 
 NUM_PERM = 8  # minhash permutations
 BAND_SIZE = 2  # rows per LSH band → 4 bands
@@ -710,152 +710,103 @@ def connected_components(ids: DataFrame, pairs: DataFrame, *,
     as their own cluster after the fixpoint).  Each round is then one
     shuffle-join of the (bounded) edge list against the label frame, a
     min-aggregate on the same id key, and one label self-join for the
-    jump.  Label frames are
-    checkpointed every round — iterative self-referencing plans
-    otherwise grow lineage exponentially and re-execute round 1 under
-    round N.  ``checkpoint_dir=None`` (default) uses
-    ``localCheckpoint``: correct in local mode, but executor loss
-    invalidates the blocks and kills the job.  On a real cluster pass a
-    reliable ``checkpoint_dir`` (HDFS/S3 path) and the rounds survive
-    executor loss via ``df.checkpoint()``.  Convergence = a round that
-    changes zero labels: the previous label rides through the round's
-    aggregate as a carried column, so the changed-count is ONE scalar
-    aggregate per round — no frame-diff join, and no dependence on the
-    id type being summable (a decimal SUM over labels would crash on
-    string ids under ANSI mode, or silently mis-converge with ANSI off).
+    jump.  Label frames are checkpointed every round by the loop of
+    ``functions.iterate``, whose docstring states the checkpoint
+    contract: on a real cluster pass a reliable ``checkpoint_dir``
+    (HDFS/S3 path) so the rounds survive executor loss.
+    Convergence = a round that changes zero labels: the previous label
+    rides through the round's aggregate as a carried column, so the
+    changed-count is ONE scalar count per round — no frame-diff join,
+    and no dependence on the id type being summable (a decimal SUM over
+    labels would crash on string ids under ANSI mode, or silently
+    mis-converge with ANSI off).
     """
-    if checkpoint_dir is not None:
-        ids.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    tsql = ids.schema[id_col].dataType.simpleString()
+    with Fixpoint(ids.sparkSession, checkpoint_dir) as fp:
+        edges = fp.checkpoint(
+            pairs.select(F.col("id_a").alias("dst"), F.col("id_b").alias("id"))
+            .unionAll(pairs.select(F.col("id_b").alias("dst"), F.col("id_a").alias("id"))),
+            lazy=True,  # right_size's count is the materializing action
+        )  # computed once, re-joined every round
+        # Every loop frame is bounded by the (now measured) edge list, and
+        # the per-round work is light (hash/compare over narrow rows), so
+        # size the rounds' tasks from the data, not the core count
+        # (functions.sizing docstring; guide §2.2).  The loop below runs
+        # under a shuffle-partition pin derived from the same measurement.
+        edges, eparts = right_size(edges)
+        # ONLY nodes that appear in an edge enter the iterative loop: on a
+        # real corpus near-dup components cover a small fraction of
+        # documents, and singletons riding O(log d) shuffle rounds would
+        # dominate the cost for no effect (their label never changes).
+        # They rejoin as their own cluster after the fixpoint.
+        touched = edges.select("id").distinct()
+        singletons = (
+            ids.select(F.col(id_col).alias("id"))
+            .join(touched, "id", "left_anti")
+            .select(F.col("id"), F.col("id").alias("lbl"))
+        )
+        fp.pin(eparts)
+        ev = fp.view(edges, "cc_e")
 
-    def ckpt(df: DataFrame, *, lazy: bool = False) -> DataFrame:
-        # ``lazy`` defers materialization to the caller's next action on
-        # the frame (the plan is still truncated to a LogicalRDD
-        # immediately, so self-join disambiguation is unaffected) —
-        # local mode only: a lazy RELIABLE checkpoint recomputes the
-        # frame once for the action and again for the checkpoint write,
-        # so cluster mode keeps eager semantics.
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=not lazy)
-
-    lbl_type = ids.schema[id_col].dataType
-    edges = ckpt(
-        pairs.select(F.col("id_a").alias("dst"), F.col("id_b").alias("id"))
-        .unionAll(pairs.select(F.col("id_b").alias("dst"), F.col("id_a").alias("id"))),
-        lazy=True,  # right_size's count is the materializing action
-    )  # computed once, re-joined every round
-    # Every loop frame is bounded by the (now measured) edge list, and
-    # the per-round work is light (hash/compare over narrow rows), so
-    # size the rounds' tasks from the data, not the core count
-    # (functions.sizing docstring; guide §2.2).  The loop below runs
-    # under a shuffle-partition pin derived from the same measurement.
-    edges, eparts = right_size(edges)
-    # ONLY nodes that appear in an edge enter the iterative loop: on a
-    # real corpus near-dup components cover a small fraction of
-    # documents, and singletons riding O(log d) shuffle rounds would
-    # dominate the cost for no effect (their label never changes).
-    # They rejoin as their own cluster after the fixpoint.
-    touched = edges.select("id").distinct()
-    singletons = (
-        ids.select(F.col(id_col).alias("id"))
-        .join(touched, "id", "left_anti")
-        .select(F.col("id"), F.col("id").alias("lbl"))
-    )
-    labels: DataFrame | None = None  # round 0 needs no label frame (see below)
-    converged = False
-    # Each round is TWO parsed spark.sql statements over temp views of
-    # the (checkpointed) round frames instead of ~10 DataFrame ops /
-    # ~25 Column builders — the py4j/analysis chatter cost ~0.25 s per
-    # operator invocation on top of the two per-round jobs (guide §4;
-    # r14 isolated A/B on the ahash pair graph: 1.47-1.52 → 1.18-1.44 s
-    # min).  The SQL text parses to the identical Catalyst plans
-    # (exceptAll + oracle verified).
-    spark = ids.sparkSession
-    tsql = lbl_type.simpleString()
-    ev = temp_view_name("cc_e")
-    lv = temp_view_name("cc_l")
-    sv = temp_view_name("cc_s")
-    try:
-        with shuffle_partitions(spark, eparts):
-            edges.createOrReplaceTempView(ev)
-            for _ in range(max_iter):
-                # "own" rows carry the node's current label; propagated
-                # rows carry NULL own — so max(own) in the aggregate
-                # recovers the previous label without a frame-diff join.
-                # Round 0's labels are the identities, so BOTH inputs are
-                # pure projections of the (checkpointed) edges: own =
-                # (id, id, id) — duplicated per edge row, collapsed by the
-                # map-side partial aggregate, max(own) still the identity
-                # — and propagated = (dst, source-id, NULL).  This removes
-                # round 0's |E|⋈|V| label join AND the separate label-
-                # frame initialization job entirely (r13 round profile:
-                # round 0 cost 3× the steady rounds).
-                if labels is None:
-                    inner = (
-                        f"SELECT id, id AS lbl, id AS own FROM {ev}"
-                        f" UNION ALL SELECT dst AS id, id AS lbl,"
-                        f" CAST(NULL AS {tsql}) AS own FROM {ev}"
-                    )
-                else:
-                    labels.createOrReplaceTempView(lv)
-                    inner = (
-                        f"SELECT id, lbl, lbl AS own FROM {lv}"
-                        f" UNION ALL SELECT e.dst AS id, l.lbl,"
-                        f" CAST(NULL AS {tsql}) AS own"
-                        f" FROM {ev} e JOIN {lv} l ON e.id = l.id"
-                    )
-                # checkpoint BEFORE the self-join: both join sides then
-                # reference one materialized plan — a lazy self-join over
-                # deep iterative lineage trips Spark's self-join attribute
-                # disambiguation ("key not found" at optimization time).
-                # stepped is LAZY: the convergence scalar below is its
-                # single consumer at materialization time (a full-scan
-                # aggregate — every partition caches inside that one job),
-                # so the round's aggregate and the changed-count are ONE
-                # job; the jump join afterwards reads the already-cached
-                # blocks from its two sides (no concurrent-consumer race:
-                # the agg ran first).
-                stepped = ckpt(spark.sql(
-                    f"SELECT id, min(lbl) AS lbl, max(own) AS prev"
-                    f" FROM ({inner}) GROUP BY id"
-                ), lazy=True)
-                # Convergence is detected on the PRE-jump aggregate: a
-                # zero-change min-propagation round means lbl(v) =
-                # min(lbl(u), u ∈ N[v]) for every v, which forces lbl
-                # equal across every edge, i.e. constant per component —
-                # the global fixpoint — so the pointer jump is provably
-                # the identity there and the final round's jump join is
-                # skipped outright (one fewer job and join per call;
-                # round count is unchanged because any pre-jump change
-                # also changed the post-jump labels).
-                n_changed = stepped.agg(F.expr(
-                    "sum(CASE WHEN prev IS NULL OR lbl != prev"
-                    " THEN 1 ELSE 0 END) AS n"
-                )).collect()[0]["n"]
-                if not n_changed:  # labels only decrease: a zero-change round is the fixpoint
-                    labels = stepped.select("id", "lbl")
-                    converged = True
-                    break
-                stepped.createOrReplaceTempView(sv)
+        # Each round is TWO parsed spark.sql statements over temp views of
+        # the (checkpointed) round frames instead of ~10 DataFrame ops /
+        # ~25 Column builders.  A round's frame is the
+        # pre-jump aggregate ``(id, lbl, prev)``; the pointer jump over it
+        # opens the NEXT round, so a converged round never pays for it.
+        def step(sv: str | None) -> DataFrame:
+            # "own" rows carry the node's current label; propagated
+            # rows carry NULL own — so max(own) in the aggregate
+            # recovers the previous label without a frame-diff join.
+            # Round 0's labels are the identities, so BOTH inputs are
+            # pure projections of the (checkpointed) edges: own =
+            # (id, id, id) — duplicated per edge row, collapsed by the
+            # map-side partial aggregate, max(own) still the identity
+            # — and propagated = (dst, source-id, NULL).  This removes
+            # round 0's |E|⋈|V| label join AND the separate label-
+            # frame initialization job entirely (profiled, round 0
+            # cost 3× the steady rounds).
+            if sv is None:
+                inner = (
+                    f"SELECT id, id AS lbl, id AS own FROM {ev}"
+                    f" UNION ALL SELECT dst AS id, id AS lbl,"
+                    f" CAST(NULL AS {tsql}) AS own FROM {ev}"
+                )
+            else:
                 # pointer jump: follow lbl -> lbl's OWN label (labels are
                 # node ids, so every lbl resolves; coalesce guards the
-                # contract)
-                labels = ckpt(spark.sql(
+                # contract).  Checkpointed eagerly BEFORE the next
+                # aggregate's self-join: both join sides then reference
+                # one materialized plan — a lazy self-join over deep
+                # iterative lineage trips Spark's self-join attribute
+                # disambiguation ("key not found" at optimization time).
+                lv = fp.view(fp.checkpoint(fp.spark.sql(
                     f"SELECT s.id, least(s.lbl, coalesce(j._jlbl, s.lbl))"
                     f" AS lbl FROM {sv} s LEFT JOIN"
                     f" (SELECT id AS _jid, lbl AS _jlbl FROM {sv}) j"
                     f" ON s.lbl = j._jid"
-                ))
-    finally:
-        for v in (ev, lv, sv):
-            try:
-                spark.catalog.dropTempView(v)
-            except Exception:
-                pass
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds — "
-            "pathological graph; raise max_iter or pre-collapse with exact dedup"
+                )), "cc_l")
+                inner = (
+                    f"SELECT id, lbl, lbl AS own FROM {lv}"
+                    f" UNION ALL SELECT e.dst AS id, l.lbl,"
+                    f" CAST(NULL AS {tsql}) AS own"
+                    f" FROM {ev} e JOIN {lv} l ON e.id = l.id"
+                )
+            return fp.spark.sql(
+                f"SELECT id, min(lbl) AS lbl, max(own) AS prev"
+                f" FROM ({inner}) GROUP BY id"
+            )
+
+        # Convergence is detected on the PRE-jump aggregate: a
+        # zero-change min-propagation round means lbl(v) =
+        # min(lbl(u), u ∈ N[v]) for every v, which forces lbl
+        # equal across every edge, i.e. constant per component —
+        # the global fixpoint — so the pointer jump is provably
+        # the identity there and is skipped outright (labels only
+        # decrease: a zero-change round is the fixpoint).
+        stepped = fp.run(
+            None, step, rounds=max_iter, probe="prev IS NULL OR lbl != prev",
+            error=f"connected_components did not converge in {max_iter} rounds — "
+                  "pathological graph; raise max_iter or pre-collapse with exact dedup",
         )
     # materialize the result: every downstream consumer of the labeling
     # (cluster sizes + the size join, the audit aggregates) reads it at
@@ -865,8 +816,8 @@ def connected_components(ids: DataFrame, pairs: DataFrame, *,
     # scale is orders of magnitude larger than the edge set — running
     # that stage at an edge-derived task width is exactly the
     # under-parallelization the pin elsewhere avoids (r13 advice).
-    return ckpt(
-        labels.unionAll(singletons).select(
+    return fp.checkpoint(
+        stepped.select("id", "lbl").unionAll(singletons).select(
             F.col("id").alias(id_col), F.col("lbl").alias("cluster_id")
         )
     )
@@ -1079,19 +1030,11 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
         f" ELSE cast(0 as bigint) END)"
         for i in range(bits)
     )
-    spark = df.sparkSession
-    v = temp_view_name("simhash")
-    toks.createOrReplaceTempView(v)
-    try:
-        return spark.sql(
-            f"SELECT `{id_col}`, ({terms}) AS simhash FROM {v}"
+    with temp_views(df.sparkSession) as view:
+        return df.sparkSession.sql(
+            f"SELECT `{id_col}`, ({terms}) AS simhash FROM {view(toks, 'simhash')}"
             f" GROUP BY `{id_col}`"
         )
-    finally:
-        try:
-            spark.catalog.dropTempView(v)
-        except Exception:
-            pass
 
 
 def simhash_near_dup_pairs(df: DataFrame, text_col: str = "text",

@@ -15,9 +15,11 @@ iteration); per-iteration cost is one shuffle-join of the rank frame
 against the pre-partitioned edges plus one aggregate on ``dst``.  The
 dangling-mass correction is a single-row aggregate cross-joined back in
 — it stays in the plan (broadcast of one row), never a driver collect.
-Fixed iteration count, so lineage depth is bounded and no convergence
-round-trips are needed; for large ``iterations`` pass ``checkpoint_dir``
-(same contract as ``connected_components``) to cut lineage.
+Fixed iteration count, so no convergence round-trips are needed.  The
+driver loop itself (per-round checkpoints, temp views, the shuffle-
+partition pin) is ``functions.iterate``'s; its docstring states the
+checkpoint contract, and a ``checkpoint_dir`` upgrades the iterative
+operators here to reliable checkpoints on a cluster.
 """
 
 from __future__ import annotations
@@ -26,12 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from sap_data_pipeline_spark.functions.sizing import (
-    adaptive_partitions,
-    right_size,
-    shuffle_partitions,
-)
-from sap_data_pipeline_spark.utils import temp_view_name
+from sap_data_pipeline_spark.functions.iterate import Fixpoint
+from sap_data_pipeline_spark.functions.sizing import adaptive_partitions, right_size
 
 
 def pagerank(
@@ -42,7 +40,6 @@ def pagerank(
     damping: float = 0.85,
     iterations: int = 3,
     checkpoint_dir: str | None = None,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list.
 
@@ -65,55 +62,29 @@ def pagerank(
     curation pipeline wants a deterministic, budget-bounded pass, and
     rank *ordering* stabilises long before the values do.
 
-    ``checkpoint_every`` (rounds between lineage cuts; 0 = never): each
-    round consumes its predecessor twice (dangling mass + contribs), so
-    an uncheckpointed plan re-derives prior rounds 2^k-fold — fine ONLY
-    for the small fixed budgets this operator is meant for (k ≤ ~4 over
-    a rank frame that is orders of magnitude smaller than the edges),
-    where trading a few redundant tiny-frame stages for ``iterations``
-    fewer eager materialization barriers is a win for one-shot
-    consumers.  Long runs and cluster jobs keep the default.
+    Every round's rank frame is checkpointed eagerly: each round
+    consumes its predecessor twice (dangling mass + contribs), so an
+    uncheckpointed plan would re-derive prior rounds 2^k-fold.  There is
+    no option to skip it (an earlier ``checkpoint_every`` knob was
+    removed).
     """
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def ckpt(df: DataFrame, *, lazy: bool = False) -> DataFrame:
-        # lazy = materialized by the next full-scan action on the frame
-        # (plan truncation is immediate either way); reliable checkpoints
-        # stay eager — a lazy one computes the frame twice (see
-        # connected_components.ckpt).
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=not lazy)
-
-    # Measure the (deduplicated) edge list once, then run the whole
-    # iteration at a data-derived task width: per-round joins/aggregates
-    # are light per row, so their cost driver is task count — size it
-    # from bytes, not cores (functions.sizing docstring; guide §2.2).
-    e0 = ckpt(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct(),
-        lazy=True,  # the count below is the materializing action
-    )
-    m = e0.count()
-    eparts = adaptive_partitions(m, e0.schema)
-    with shuffle_partitions(e0.sparkSession, eparts):
-        return _pagerank_rounds(e0, eparts, damping, iterations,
-                                checkpoint_every, ckpt)
-
-
-def _pagerank_rounds(e0: DataFrame, eparts: int, damping: float,
-                     iterations: int, checkpoint_every: int, ckpt) -> DataFrame:
-    e = (
-        e0.repartition(eparts, "src")  # the ONE shuffle of the big frame; reused per round
-        .persist()
-    )
-    base = None
-    try:
-        nodes = (
+    with Fixpoint(edges.sparkSession, checkpoint_dir) as fp:
+        # Measure the (deduplicated) edge list once, then run the whole
+        # iteration at a data-derived task width: per-round joins/aggregates
+        # are light per row, so their cost driver is task count — size it
+        # from bytes, not cores (functions.sizing docstring; guide §2.2).
+        e0 = fp.checkpoint(
+            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct(),
+            lazy=True,  # the count below is the materializing action
+        )
+        eparts = adaptive_partitions(e0.count(), e0.schema)
+        fp.pin(eparts)
+        # the ONE shuffle of the big frame; reused per round
+        e = fp.persist(e0.repartition(eparts, "src"))
+        nodes = fp.persist(
             e.select(F.col("src").alias("node"))
             .unionAll(e.select(F.col("dst").alias("node")))
             .distinct()
-            .persist()
         )
         outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         # one driver scalar up front (node count) — same budget class as
@@ -123,70 +94,38 @@ def _pagerank_rounds(e0: DataFrame, eparts: int, damping: float,
             return nodes.select("node", F.lit(0.0).alias("pr"))
         # out-degree is STATIC — join it to the node set once and carry
         # ``deg`` inside the rank frame, instead of re-joining outdeg
-        # every iteration (saves one node-sized shuffle join per round)
-        base = (
+        # every iteration (saves one node-sized shuffle join per round).
+        # nodes/base are referenced by the returned (checkpointed) frame
+        # only through materialized blocks — contract pinned by
+        # test_graph.test_returned_frame_survives_internal_unpersist.
+        base = fp.persist(
             nodes.join(outdeg, nodes["node"] == outdeg["src"], "left")
             .select("node", "deg")
             .repartition(eparts, "node")
-            .persist()
         )
-        ranks = base.select("node", "deg", F.lit(1.0 / n).alias("pr"))
-        # Each round is ONE parsed spark.sql statement over temp views of
-        # the fixed frames (edges, base) and the previous rank frame —
-        # the Column-chain round paid ~0.2 s of py4j/analysis chatter per
-        # invocation on top of the per-round jobs (guide §4; r14).
-        # Identical plan: dangling mass stays a broadcast one-row
-        # aggregate (hinted), never a driver collect.
-        spark = e0.sparkSession
-        ev = temp_view_name("pr_e")
-        bv = temp_view_name("pr_b")
-        rv = temp_view_name("pr_r")
+        ev, bv = fp.view(e, "pr_e"), fp.view(base, "pr_b")
         lit_reset = repr((1.0 - damping) / n) + "D"
         lit_damp = repr(float(damping)) + "D"
         lit_n = repr(float(n)) + "D"
-        round_sql = (
-            f"SELECT /*+ BROADCAST(dg) */ b.node, b.deg,"
-            f" {lit_reset} + {lit_damp} * (coalesce(c.in_mass, 0.0D)"
-            f" + dg._dm / {lit_n}) AS pr"
-            f" FROM {bv} b LEFT JOIN ("
-            f"SELECT e.dst AS node, sum(w) AS in_mass FROM ("
-            f"SELECT node, pr / deg AS w FROM {rv} WHERE deg IS NOT NULL) r"
-            f" JOIN {ev} e ON r.node = e.src GROUP BY e.dst"
-            f") c ON b.node = c.node CROSS JOIN ("
-            f"SELECT coalesce(sum(pr), 0.0D) AS _dm FROM {rv}"
-            f" WHERE deg IS NULL) dg"
-        )
-        try:
-            e.createOrReplaceTempView(ev)
-            base.createOrReplaceTempView(bv)
-            for it in range(iterations):
-                ranks.createOrReplaceTempView(rv)
-                ranks = spark.sql(round_sql)
-                if checkpoint_every and (it + 1) % checkpoint_every == 0:
-                    # eager deliberately: each round's frame is read by TWO
-                    # consumers (the next round's dangling-mass broadcast and
-                    # the contribs join) — a lazy checkpoint would let those
-                    # concurrent stages race to compute it twice (r14 A/B:
-                    # the all-lazy variant measured neutral-to-slower, and
-                    # the duplicate compute is corpus-sized at cluster scale)
-                    ranks = ckpt(ranks)
-        finally:
-            for v in (ev, bv, rv):
-                try:
-                    spark.catalog.dropTempView(v)
-                except Exception:
-                    pass
-        return ranks.select("node", "pr")
-    finally:
-        e.unpersist()
-        # nodes/base are referenced by the returned (checkpointed)
-        # frame only through materialized blocks — contract pinned by
-        # test_graph.test_returned_frame_survives_internal_unpersist
-        # (consumes the returned frame after a cache clear + GC, both
-        # checkpoint modes)
-        nodes.unpersist()
-        if base is not None:
-            base.unpersist()
+
+        # dangling mass stays a broadcast one-row aggregate (hinted),
+        # never a driver collect
+        def step(rv: str) -> DataFrame:
+            return fp.spark.sql(
+                f"SELECT /*+ BROADCAST(dg) */ b.node, b.deg,"
+                f" {lit_reset} + {lit_damp} * (coalesce(c.in_mass, 0.0D)"
+                f" + dg._dm / {lit_n}) AS pr"
+                f" FROM {bv} b LEFT JOIN ("
+                f"SELECT e.dst AS node, sum(w) AS in_mass FROM ("
+                f"SELECT node, pr / deg AS w FROM {rv} WHERE deg IS NOT NULL) r"
+                f" JOIN {ev} e ON r.node = e.src GROUP BY e.dst"
+                f") c ON b.node = c.node CROSS JOIN ("
+                f"SELECT coalesce(sum(pr), 0.0D) AS _dm FROM {rv}"
+                f" WHERE deg IS NULL) dg"
+            )
+
+        ranks = base.select("node", "deg", F.lit(1.0 / n).alias("pr"))
+        return fp.run(ranks, step, rounds=iterations).select("node", "pr")
 
 
 def tree_root_depth(
@@ -212,90 +151,57 @@ def tree_root_depth(
     Each round contracts every pointer across its ancestor's pointer:
     ``(anc, d) ← (anc.anc, d + anc.d)`` — after k rounds every pointer
     spans 2^k levels, so a depth-10^6 chain converges in ~20 rounds.
-    Same checkpoint-per-round discipline as ``connected_components``
-    (iterative self-referencing lineage otherwise re-executes round 1
-    under round N); ``checkpoint_dir`` upgrades to reliable
-    checkpoints on a cluster.  Cycles (bad data) would never converge
-    — the ``max_iter`` guard raises instead of spinning.
+    The loop, its per-round checkpoint and its convergence probe are
+    ``functions.iterate``'s (see its docstring for the checkpoint
+    contract); ``checkpoint_dir`` upgrades to reliable checkpoints on a
+    cluster.  Cycles (bad data) would never converge — the ``max_iter``
+    guard raises instead of spinning.
     """
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def ckpt(df: DataFrame, *, lazy: bool = False) -> DataFrame:
-        # lazy = materialized by the caller's next full-scan action (plan
-        # truncation is immediate either way); reliable checkpoints stay
-        # eager — a lazy one would compute the frame twice (see
-        # connected_components.ckpt).
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=not lazy)
-
-    e = edges.select(
-        F.col(child).alias("node"), F.col(parent).alias("anc")
-    ).filter(F.col("node") != F.col("anc")).distinct()
-    roots = (
-        e.select(F.col("anc").alias("node"))
-        .distinct()
-        .join(e.select("node"), "node", "left_anti")
-        .unionAll(
-            edges.filter(F.col(child) == F.col(parent))
-            .select(F.col(child).alias("node")).distinct()
-        )
-        .distinct()
-    )
-    # pointer frame: every node's current ancestor + distance spanned
-    ptr = ckpt(
-        e.select("node", "anc", F.lit(1).cast("long").alias("d"))
-        .unionAll(
-            roots.select(
-                "node", F.col("node").alias("anc"), F.lit(0).cast("long").alias("d")
+    with Fixpoint(edges.sparkSession, checkpoint_dir) as fp:
+        e = edges.select(
+            F.col(child).alias("node"), F.col(parent).alias("anc")
+        ).filter(F.col("node") != F.col("anc")).distinct()
+        roots = (
+            e.select(F.col("anc").alias("node"))
+            .distinct()
+            .join(e.select("node"), "node", "left_anti")
+            .unionAll(
+                edges.filter(F.col(child) == F.col(parent))
+                .select(F.col(child).alias("node")).distinct()
             )
-        ),
-        lazy=True,  # right_size's count is the materializing action
-    )
-    # every round's frames are pointer-frame-sized and the per-row work
-    # is a key compare + add — task-count-bound, so size the rounds from
-    # the measured frame (functions.sizing docstring; guide §2.2)
-    ptr, pparts = right_size(ptr)
-    # Each round is ONE parsed spark.sql self-join over a temp view of
-    # the previous (checkpointed) pointer frame — the Column-chain round
-    # paid ~0.1-0.2 s of py4j/analysis chatter per invocation on top of
-    # the one per-round job (guide §4; r14).  Identical Catalyst plan.
-    spark = ptr.sparkSession
-    pv = temp_view_name("tree_p")
-    round_sql = (
-        # a pointer is settled when its ancestor's pointer is a self-loop
-        f"SELECT p.node, q.anc AS anc, p.d + q.d AS d,"
-        f" (p.anc = q.anc) AS _settled"
-        f" FROM {pv} p JOIN {pv} q ON p.anc = q.node"
-    )
-    try:
-        with shuffle_partitions(spark, pparts):
-            for _ in range(max_iter):
-                ptr.createOrReplaceTempView(pv)
-                # lazy: the convergence probe below is the single consumer
-                # at materialization time — it computes the round's join
-                # and the open-pointer count in one job (the r13 shape paid
-                # an eager checkpoint count plus a limit(1) probe per
-                # round).  The probe is a FULL count, not limit(1): a limit
-                # over a lazy checkpoint would leave unscanned partitions
-                # to a backfill job — same zero/non-zero decision either way.
-                stepped = ckpt(spark.sql(round_sql), lazy=True)
-                n_open = stepped.filter(~F.col("_settled")).count()
-                ptr = stepped.select("node", "anc", "d")
-                if n_open == 0:
-                    return ptr.select(
-                        "node", F.col("anc").alias("root"), F.col("d").alias("depth")
-                    )
-    finally:
-        try:
-            spark.catalog.dropTempView(pv)
-        except Exception:
-            pass
-    raise RuntimeError(
-        f"tree_root_depth did not converge in {max_iter} rounds — "
-        "the edge set likely contains a cycle"
-    )
+            .distinct()
+        )
+        # pointer frame: every node's current ancestor + distance spanned
+        ptr = fp.checkpoint(
+            e.select("node", "anc", F.lit(1).cast("long").alias("d"))
+            .unionAll(
+                roots.select(
+                    "node", F.col("node").alias("anc"), F.lit(0).cast("long").alias("d")
+                )
+            ),
+            lazy=True,  # right_size's count is the materializing action
+        )
+        # every round's frames are pointer-frame-sized and the per-row work
+        # is a key compare + add — task-count-bound, so size the rounds from
+        # the measured frame (functions.sizing docstring; guide §2.2)
+        ptr, pparts = right_size(ptr)
+        fp.pin(pparts)
+        # the probe computes the round's join and the open-pointer count
+        # in one job; a pointer is settled when its ancestor's pointer is
+        # a self-loop
+        ptr = fp.run(
+            ptr,
+            lambda pv: fp.spark.sql(
+                f"SELECT p.node, q.anc AS anc, p.d + q.d AS d,"
+                f" (p.anc = q.anc) AS _settled"
+                f" FROM {pv} p JOIN {pv} q ON p.anc = q.node"
+            ),
+            rounds=max_iter,
+            probe="NOT _settled",
+            error=f"tree_root_depth did not converge in {max_iter} rounds — "
+                  "the edge set likely contains a cycle",
+        )
+    return ptr.select("node", F.col("anc").alias("root"), F.col("d").alias("depth"))
 
 
 def label_propagation(
@@ -336,58 +242,35 @@ def label_propagation(
     ``row_number`` window ordered (cnt desc, label asc) — same winner,
     type-agnostic, and the rank<=1 filter collapses to WindowGroupLimit
     (top-1 per node below the sort).  Per-round lineage is cut by the
-    same checkpoint discipline as :func:`connected_components`.
+    checkpoint policy of ``functions.iterate`` (see its docstring).
     """
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def ckpt(df: DataFrame, *, lazy: bool = False) -> DataFrame:
-        # same contract as pagerank's ckpt: lazy defers materialization
-        # to the next full-scan action; reliable checkpoints stay eager
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=not lazy)
-
     from pyspark.sql.types import NumericType
 
     numeric_ids = isinstance(
         edges.schema[src].dataType, NumericType
     ) and isinstance(edges.schema[dst].dataType, NumericType)
 
-    fwd = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    rev = edges.select(F.col(dst).alias("src"), F.col(src).alias("dst"))
-    # measure the symmetrized edge list once, then run every round at a
-    # data-derived task width (functions.sizing docstring; guide §2.2)
-    e0 = ckpt(
-        fwd.unionAll(rev)
-        .filter(F.col("src") != F.col("dst"))  # self-loops carry no info
-        .distinct(),
-        lazy=True,  # the count below is the materializing action
-    )
-    eparts = adaptive_partitions(e0.count(), e0.schema)
-    with shuffle_partitions(e0.sparkSession, eparts):
-        return _lpa_rounds(e0, eparts, iterations, numeric_ids, ckpt)
-
-
-def _lpa_rounds(e0: DataFrame, eparts: int, iterations: int,
-                numeric_ids: bool, ckpt) -> DataFrame:
-    e = e0.repartition(eparts, "src").persist()
-    try:
-        nodes = (
+    with Fixpoint(edges.sparkSession, checkpoint_dir) as fp:
+        fwd = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        rev = edges.select(F.col(dst).alias("src"), F.col(src).alias("dst"))
+        # measure the symmetrized edge list once, then run every round at a
+        # data-derived task width (functions.sizing docstring; guide §2.2)
+        e0 = fp.checkpoint(
+            fwd.unionAll(rev)
+            .filter(F.col("src") != F.col("dst"))  # self-loops carry no info
+            .distinct(),
+            lazy=True,  # the count below is the materializing action
+        )
+        eparts = adaptive_partitions(e0.count(), e0.schema)
+        fp.pin(eparts)
+        e = fp.persist(e0.repartition(eparts, "src"))
+        nodes = fp.persist(
             e.select(F.col("src").alias("node"))
             .unionAll(e.select(F.col("dst").alias("node")))
             .distinct()
-            .persist()
         )
-        labels = nodes.select("node", F.col("node").alias("lbl"))
-        # Each round is ONE parsed spark.sql statement over temp views of
-        # the edge layout and the previous (checkpointed) label frame —
-        # the Column-chain round cost ~0.2 s of py4j/analysis chatter per
-        # invocation on top of the per-round jobs (guide §4; r14 A/B).
-        # The SQL parses to the identical Catalyst plan per round.
-        spark = e0.sparkSession
-        ev = temp_view_name("lpa_e")
-        lv = temp_view_name("lpa_l")
+        ev = fp.view(e, "lpa_e")
+
         # votes = neighbor labels along the fixed edge layout + the
         # self-vote; winner per node: max count, then min label.  The
         # numeric path rides one lexicographic struct max (negation
@@ -396,41 +279,30 @@ def _lpa_rounds(e0: DataFrame, eparts: int, iterations: int,
         # to WindowGroupLimit).  The self-vote puts every labelled node
         # into the counts, so the winner frame covers exactly the label
         # node set — it IS the next label frame (no join-back needed).
-        counts_sql = (
-            "SELECT node, lbl, count(1) AS cnt FROM ("
-            f"SELECT e.dst AS node, l.lbl FROM {lv} l"
-            f" JOIN {ev} e ON l.node = e.src"
-            f" UNION ALL SELECT node, lbl FROM {lv}"
-            ") GROUP BY node, lbl"
-        )
-        if numeric_ids:
-            round_sql = (
-                "SELECT node, -(w.neg) AS lbl FROM ("
-                "SELECT node, max(named_struct('cnt', cnt, 'neg', -lbl)) AS w"
-                f" FROM ({counts_sql}) GROUP BY node)"
+        def step(lv: str) -> DataFrame:
+            counts_sql = (
+                "SELECT node, lbl, count(1) AS cnt FROM ("
+                f"SELECT e.dst AS node, l.lbl FROM {lv} l"
+                f" JOIN {ev} e ON l.node = e.src"
+                f" UNION ALL SELECT node, lbl FROM {lv}"
+                ") GROUP BY node, lbl"
             )
-        else:
-            round_sql = (
+            if numeric_ids:
+                return fp.spark.sql(
+                    "SELECT node, -(w.neg) AS lbl FROM ("
+                    "SELECT node, max(named_struct('cnt', cnt, 'neg', -lbl)) AS w"
+                    f" FROM ({counts_sql}) GROUP BY node)"
+                )
+            return fp.spark.sql(
                 "SELECT node, lbl FROM ("
                 "SELECT node, lbl, row_number() OVER ("
                 "PARTITION BY node ORDER BY cnt DESC, lbl ASC) AS _rn"
                 f" FROM ({counts_sql})) WHERE _rn = 1"
             )
-        try:
-            e.createOrReplaceTempView(ev)
-            for _ in range(iterations):
-                labels.createOrReplaceTempView(lv)
-                labels = ckpt(spark.sql(round_sql))
-        finally:
-            for v in (ev, lv):
-                try:
-                    spark.catalog.dropTempView(v)
-                except Exception:
-                    pass
-        return labels.withColumnRenamed("lbl", "community")
-    finally:
-        e.unpersist()
-        nodes.unpersist()
+
+        labels = nodes.select("node", F.col("node").alias("lbl"))
+        labels = fp.run(labels, step, rounds=iterations)
+    return labels.withColumnRenamed("lbl", "community")
 
 
 def _orient(und: DataFrame, deg: DataFrame, orient: str) -> DataFrame:

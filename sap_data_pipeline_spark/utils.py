@@ -47,18 +47,3 @@ def retry_call(
         raise last
     return None
 
-
-# Monotonic suffix for session-scoped temp-view names: the iterative
-# graph/dedup operators register their per-round frames as temp views so
-# each round is ONE parsed spark.sql round-trip instead of dozens of
-# py4j Column/DataFrame calls (guide §4; measured ~0.15-0.3 s per
-# operator invocation, r14).  Unique names keep interleaved invocations
-# in one session (tests, streaming batches) from clobbering each other.
-_VIEW_SEQ = 0
-
-
-def temp_view_name(prefix: str) -> str:
-    """A process-unique temp-view name ``_{prefix}{n}``."""
-    global _VIEW_SEQ
-    _VIEW_SEQ += 1
-    return f"_{prefix}{_VIEW_SEQ}"

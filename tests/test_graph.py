@@ -3,6 +3,8 @@ power-iteration reference on the same graph."""
 
 from __future__ import annotations
 
+import uuid
+
 import numpy as np
 import pytest
 
@@ -209,23 +211,6 @@ def test_label_propagation_drops_self_loops_and_directions(spark):
     assert got == {1: 1, 2: 1}
 
 
-def test_pagerank_checkpoint_every_zero_same_ranks(spark):
-    """checkpoint_every=0 (one-shot lazy plan) must agree with the
-    per-round-checkpoint default to 6 dp — double summation order over
-    shuffles is the only divergence allowed."""
-    from sap_data_pipeline_spark.operators.graph import pagerank
-
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 0), (2, 3), (3, 3), (4, 0)],
-        "src long, dst long",
-    )
-    a = {r["node"]: round(r["pr"], 6)
-         for r in pagerank(edges, iterations=4).collect()}
-    b = {r["node"]: round(r["pr"], 6)
-         for r in pagerank(edges, iterations=4, checkpoint_every=0).collect()}
-    assert a == b
-
-
 def test_triangle_counts_k4_plus_pendant(spark):
     """Hand-computed: K4 (every node deg 3, 3 triangles, clustering 1)
     plus a pendant hung off node 0 (deg 4, still 3 triangles,
@@ -266,3 +251,133 @@ def test_triangle_counts_degree_orientation_same_output(spark):
     a = sorted(map(tuple, triangle_counts(edges, orient="id").collect()))
     b = sorted(map(tuple, triangle_counts(edges, orient="degree").collect()))
     assert a == b and len(a) == 31
+
+
+# ---------------------------------------------------------------------------
+# fixpoint loops: Spark job counts and temp-view hygiene
+# ---------------------------------------------------------------------------
+
+
+def _fixpoint_calls(spark):
+    """One small fixed input per iterative operator, as ``name -> call``."""
+    from sap_data_pipeline_spark.operators.dedup import connected_components
+    from sap_data_pipeline_spark.operators.graph import (
+        label_propagation,
+        tree_root_depth,
+    )
+
+    links = spark.createDataFrame(
+        [(0, 1), (0, 2), (1, 2), (2, 0), (1, 4), (3, 3), (3, 4)],
+        "src long, dst long")
+    rings = spark.createDataFrame(
+        [(0, 1), (1, 2), (0, 2), (10, 11), (11, 12), (10, 12), (2, 10)],
+        "src long, dst long")
+    forest = spark.createDataFrame(
+        [(1, 0), (2, 0), (3, 1), (4, 3), (11, 10), (12, 11), (20, 20)],
+        "child long, parent long")
+    ids = spark.createDataFrame([(i,) for i in range(10)], "doc_id long")
+    pairs = spark.createDataFrame([(0, 1), (1, 2), (2, 3), (5, 6)],
+                                  "id_a long, id_b long")
+    return {
+        "pagerank": lambda **kw: pagerank(links, iterations=3, **kw),
+        "label_propagation": lambda **kw: label_propagation(
+            rings, iterations=4, **kw),
+        "tree_root_depth": lambda **kw: tree_root_depth(forest, **kw),
+        "connected_components": lambda **kw: connected_components(
+            ids, pairs, **kw),
+    }
+
+
+def _count_jobs(spark, fn):
+    """(jobs run while ``fn()`` builds its frame, jobs run collecting
+    it), read from the status tracker under a job group of our own."""
+    sc = spark.sparkContext
+    group = f"fixpoint-jobs-{uuid.uuid4().hex}"
+
+    def seen() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        built = seen()
+        out.collect()
+        return built, seen() - built
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+@pytest.mark.parametrize("name,local,reliable", [
+    ("pagerank", (29, 1), (30, 1)),
+    ("label_propagation", (22, 1), (23, 1)),
+    ("tree_root_depth", (21, 1), (25, 1)),
+    ("connected_components", (26, 1), (30, 1)),
+])
+@pytest.mark.parametrize("use_dir", [False, True])
+def test_fixpoint_job_counts_pinned(spark, tmp_path, name, local, reliable,
+                                    use_dir):
+    """Each iterative operator runs a fixed number of Spark jobs on a
+    fixed input: (jobs while building the frame, jobs collecting it),
+    under local and reliable checkpoints.  The checkpoint policy, the
+    convergence probe and CC's round-0 shortcut all show in these
+    counts, so a change to the shared loop that adds a job fails here.
+    No temp view outlives the call."""
+    kw = {"checkpoint_dir": str(tmp_path / "ck")} if use_dir else {}
+    call = _fixpoint_calls(spark)[name]
+    before = _temp_views(spark)
+    assert _count_jobs(spark, lambda: call(**kw)) == (reliable if use_dir else local)
+    assert _temp_views(spark) == before
+
+
+def test_fixpoint_failure_leaves_no_temp_views(spark):
+    """The loops that run out of rounds raise, and still drop every
+    view they registered (and restore the shuffle-partition pin)."""
+    from sap_data_pipeline_spark.operators.dedup import connected_components
+    from sap_data_pipeline_spark.operators.graph import tree_root_depth
+
+    before = _temp_views(spark)
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    cycle = spark.createDataFrame([(1, 2), (2, 3), (3, 1)],
+                                  "child long, parent long")
+    with pytest.raises(RuntimeError, match="cycle"):
+        tree_root_depth(cycle, max_iter=6)
+    n = 64
+    ids = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+    chain = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
+                                  "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(ids, chain, max_iter=2)
+    assert _temp_views(spark) == before
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+
+
+def test_temp_views_names_unique_across_threads():
+    """8 threads registering 10k views each never mint the same name."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from sap_data_pipeline_spark.functions.iterate import temp_views
+
+    class Frame:
+        def createOrReplaceTempView(self, name):
+            pass
+
+    class Catalog:
+        def dropTempView(self, name):
+            return True
+
+    class Session:
+        catalog = Catalog()
+
+    def mint(_):
+        with temp_views(Session()) as view:
+            return [view(Frame(), "t") for _ in range(10_000)]
+
+    with ThreadPoolExecutor(8) as pool:
+        names = [n for batch in pool.map(mint, range(8)) for n in batch]
+    assert len(set(names)) == len(names) == 80_000

@@ -330,14 +330,16 @@ def test_apply_line_filters_rewrites_in_place_and_is_shuffle_free(spark):
 
     df = spark.createDataFrame(
         [(1, "h9", "a good long sentence here.\nshort\n"
-                    "a good long sentence here.\nno terminal punct line")],
+                    "a good long sentence here.\nno terminal punct line"),
+         (2, "h9", "nope\nshort")],  # every line fails the shape rules
         "doc_id long, host string, text string",
     )
-    [r] = apply_line_filters(df).collect()
+    r, empty = sorted(apply_line_filters(df).collect(), key=lambda r: r["doc_id"])
     # all original columns survive, text rewritten in place
     assert r["host"] == "h9"
     assert r["text"] == "a good long sentence here."
     assert r["lines_removed"] == 3  # short + non-terminal + duplicate
+    assert empty["text"] == "" and empty["lines_removed"] == 2
     plan = apply_line_filters(df)._jdf.queryExecution() \
         .executedPlan().toString()
     assert count_hash_exchanges(plan) == 0, plan
